@@ -101,7 +101,7 @@ def _cpu_snapshot() -> tuple[float, float]:
 
 _IOWAIT_S = 0.0
 _SECTIONS: dict[str, dict] = {}
-_SEC_MARK = (time.time(), *_cpu_snapshot(), 0.0)
+_SEC_MARK = (time.time(), *_cpu_snapshot(), _IOWAIT_S)
 
 # Per-section contention control (VERDICT r9 #1): the startup idle gate
 # checks ONCE, then the bench records whatever happens — six of seven r9
@@ -281,7 +281,7 @@ def main() -> None:
                     times[key] = round(min(times.get(key, float("inf")), dt), 4)
                 except Exception as e:  # keep the bench line emitting even if one query breaks
                     print(f"bench {name} failed: {e}", file=sys.stderr)
-                    times[key] = -1.0
+                    times.setdefault(key, -1.0)
 
     _regate("tpch")
     times: dict[str, float] = {}
@@ -501,7 +501,7 @@ def main() -> None:
                             times_mem[key] = round(min(times_mem.get(key, float("inf")), dt), 4)
                         except Exception as e:
                             print(f"bench-mem {name} failed: {e}", file=sys.stderr)
-                            times_mem[key] = -1.0
+                            times_mem.setdefault(key, -1.0)
 
             _regate("mem")
             _run_mem_passes(times_mem, max(2, ITERS - 2), _T0 + BUDGET_S * 1.15)

@@ -534,7 +534,7 @@ def hamming64(a: Column, b: Column) -> Column:
 def _simhash_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fp) rows for the simhash family. The fold formulation was
     re-A/B'd against an exploded-token + 64-codegen-SUM row form in r10
-    (tools/opt_ab_r10.py, VERDICT r9 #3): the fold stayed 4-6× faster
+    (OPTIMIZATION_r10.md §3, VERDICT r9 #3): the fold stayed 4-6× faster
     at sf0.1 even under the new shared-exchange input (noop best 0.38 s
     vs 2.15 s) — the r4 result did not invert, the row form's 1.5M-row
     explode + 64 aggregate buffers costs more than the interpreted

@@ -50,15 +50,11 @@ TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
 
 
 def activate(spark: SparkSession, sf_dir: str,
-             tables: tuple[str, ...] = TPCH_TABLES,
-             extra_paths: dict[str, str] | None = None) -> float:
+             tables: tuple[str, ...] = TPCH_TABLES) -> float:
     """Register `{sf_dir}/{t}.parquet` (the compacted copy when one is
     active) as external catalog tables with full column statistics and
     turn on CBO for the session. Idempotent; returns seconds spent
     analyzing (0.0 when already present).
-
-    `extra_paths` maps extra table names to explicit parquet paths
-    (e.g. partsupp for the official-text harness).
 
     The `events` table is deliberately NOT handled here: its raw file
     can carry TIMESTAMP(NANOS) which needs catalog.load_table's ns->us
@@ -71,8 +67,6 @@ def activate(spark: SparkSession, sf_dir: str,
         spark.conf.set(k, v)
     root = compact.resolve(sf_dir) or sf_dir
     paths = {t: os.path.join(root, f"{t}.parquet") for t in tables}
-    for t, p in (extra_paths or {}).items():
-        paths[t] = p
     for name, path in paths.items():
         key = (os.path.abspath(sf_dir), name)
         # Tag folds the RESOLVED path, not just sf_dir: compaction

@@ -49,17 +49,28 @@ def _events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
     return schema, ts_is_long
 
 
+def _stage_subdir(sf_dir: str, leaf: str) -> str:
+    """`.stream_stage/<tag>/<leaf>` under this checkout's root
+    (gitignored), keyed by sf_dir and created on demand."""
+    import hashlib
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    d = os.path.join(root, ".stream_stage", tag, leaf)
+    os.makedirs(d, exist_ok=True)
+    return d
+
+
 def _stage_dir(sf_dir: str) -> str:
     """Spark's file stream source requires a *directory*; TESTDATA ships
     one parquet file per table in a read-only tree. Stage a symlink
     directory under the repo (gitignored) — zero-copy, and exactly how a
     production deployment points the source at a landing directory."""
-    import hashlib
     import os
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/root/repo/.stream_stage/{tag}/events"
-    os.makedirs(d, exist_ok=True)
+    d = _stage_subdir(sf_dir, "events")
     link = os.path.join(d, "part-00000.parquet")
     if not os.path.exists(link):
         os.symlink(os.path.join(sf_dir, "events.parquet"), link)
@@ -283,12 +294,9 @@ def stage_events_duplicated(sf_dir: str) -> str:
     """A stream-source dir that delivers every event TWICE (two links to
     the same parquet) — the at-least-once-delivery fixture the dedup
     operator exists for."""
-    import hashlib
     import os
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/root/repo/.stream_stage/{tag}/events_dup"
-    os.makedirs(d, exist_ok=True)
+    d = _stage_subdir(sf_dir, "events_dup")
     src = os.path.join(sf_dir, "events.parquet")
     for name in ("part-00000.parquet", "part-00001.parquet"):
         link = os.path.join(d, name)

@@ -10,9 +10,11 @@ real files in the repo root.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from rust_query_engine_greatest_spark.queries import REGISTRY  # noqa: E402
@@ -111,7 +113,7 @@ def test_emulator_norm_is_driver_asymmetric_on_decimal():
     an emulator that coerced both sides."""
     import decimal
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from driver_emulator import norm_cell, value_hash
 
     d = decimal.Decimal("3.50")
@@ -120,3 +122,21 @@ def test_emulator_norm_is_driver_asymmetric_on_decimal():
     # and the composite hash diverges for a decimal-output spark result
     assert (value_hash(["x"], [(d,)], side="spark")
             != value_hash(["x"], [(d,)], side="oracle"))
+
+
+def test_no_checkout_root_literal_in_code():
+    """Tests, tools and the package locate the checkout from `__file__`:
+    a copy of the repo that hard-codes the original root imports and
+    tests the original's code (and writes into its tree), not its own."""
+    hits = []
+    for sub in ("tests", "tools", "rust_query_engine_greatest_spark"):
+        for dirpath, _, files in os.walk(os.path.join(ROOT, sub)):
+            for fn in files:
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                with open(path, encoding="utf-8") as f:
+                    for i, line in enumerate(f, 1):
+                        if ROOT in line:
+                            hits.append(f"{os.path.relpath(path, ROOT)}:{i}")
+    assert not hits, "checkout root hard-coded at:\n" + "\n".join(hits)

@@ -47,7 +47,7 @@ def ensure_sf1(dest: str, sf: float = 1.0) -> None:
     os.makedirs(dest, exist_ok=True)
     con = duckdb.connect()
     con.execute(f"CALL dbgen(sf={sf})")
-    for t in TPCH_TABLES + ("partsupp",):
+    for t in TPCH_TABLES:
         con.execute(f"COPY {t} TO '{dest}/{t}.parquet' (FORMAT PARQUET)")
 
 
@@ -72,10 +72,6 @@ def main() -> None:
                          "is stats ON — catalog row/NDV statistics are "
                          "how a production warehouse runs, and CBO join "
                          "reorder needs them")
-    ap.add_argument("--official", action="store_true",
-                    help="run the reference's own benchmarks/queries/q*.sql "
-                         "texts (partsupp included) through the slt dialect "
-                         "layer instead of the registry's adapted queries")
     ap.add_argument("--mem", action="store_true",
                     help="cache every table into Spark's columnar "
                          "in-memory cache first (the reference's "
@@ -121,37 +117,13 @@ def main() -> None:
         # catalog.load_table then serves stats-backed catalog tables so
         # join reorder & estimation apply to the registry DataFrame path
         # too (measured SF1: q21 4.3→2.3, q9 2.0→1.0, q12 1.6→0.6)
-        prep_s += stats.activate(
-            spark, args.dir,
-            extra_paths=({"partsupp": f"{args.dir}/partsupp.parquet"}
-                         if args.official else None))
+        prep_s += stats.activate(spark, args.dir)
 
     con = duckdb.connect()
     for t in TPCH_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{args.dir}/{t}.parquet')")
     tracker.end("prep")
-
-    if args.official:
-        census, best = run_official(spark, con, args, tracker)
-        print(json.dumps({
-            "metric": (f"tpch_sf{args.sf:g}_official_mem_total_best"
-                       if args.mem
-                       else f"tpch_sf{args.sf:g}_official_total_best"),
-            "value": round(sum(best.values()), 4),
-            "unit": "sec",
-            "sf": args.sf,
-            "layout": ("mem+" + args.layout) if args.mem else args.layout,
-            "prep_s": round(prep_s, 2),
-            "queries": {k: round(v, 4) for k, v in best.items()},
-            "correctness": census,
-            "load_start": load_start,
-            "load": list(os.getloadavg()),
-            "idle_gate_waited_s": gate_waited,
-            "sections": tracker.sections,
-            "ts": round(time.time(), 1),
-        }))
-        return
 
     if args.queries:
         # accept both the short (q1) and registry (tpch_q1) spellings
@@ -256,170 +228,6 @@ def main() -> None:
         "sections": tracker.sections,
         "ts": round(time.time(), 1),
     }))
-
-
-# --------------------------------------------------------------------------
-# --official mode: the reference's own benchmark query TEXTS
-# (benchmarks/queries/q*.sql — official TPC-H, partsupp included),
-# translated by the same dialect layer the slt harness uses, executed
-# on Spark views over the SF1 parquet and differentially compared
-# against DuckDB running the identical official text. This removes the
-# adapted-constants caveat entirely: q2/q7/q8/q10 select real rows
-# here. Exact hash first; DECIMAL-vs-DOUBLE aggregate rendering (e.g.
-# avg) falls back to a rel-1e-9 numeric compare reported as
-# "match_approx", never silently.
-
-REF_QUERIES = ("/root/reference/datafusion-greatest/benchmarks/queries")
-ALL_TABLES = TPCH_TABLES + ("partsupp",)
-
-
-def _rows_close(a, b) -> bool:
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    if len(a) != len(b):
-        return False
-
-    def key(row):
-        return tuple(str(v) for v in row)
-
-    def decimal_scale_eq(x, y) -> bool:
-        """Spark keeps DECIMAL through avg (scale s+4, HALF_UP — the
-        same typing DataFusion uses, family-1 notes); DuckDB's avg is
-        f64. They agree EXACTLY at the decimal's own scale: quantizing
-        the double with the same rounding must reproduce the decimal
-        (q1 avg_* columns, q8/q14 shares)."""
-        if isinstance(y, Decimal) and isinstance(x, float):
-            x, y = y, x
-        if not (isinstance(x, Decimal) and isinstance(y, float)):
-            return False
-        quantum = Decimal(1).scaleb(x.as_tuple().exponent)
-        try:
-            return Decimal(y).quantize(quantum, rounding=ROUND_HALF_UP) == x
-        except ArithmeticError:
-            return False
-
-    for ra, rb in zip(sorted(a, key=key), sorted(b, key=key)):
-        if len(ra) != len(rb):
-            return False
-        for x, y in zip(ra, rb):
-            if x is None or y is None:
-                if x is not y:
-                    return False
-                continue
-            if decimal_scale_eq(x, y):
-                continue
-            try:
-                fx, fy = float(x), float(y)
-                if not (math.isclose(fx, fy, rel_tol=1e-9, abs_tol=1e-9)):
-                    return False
-            except (TypeError, ValueError):
-                if str(x) != str(y):
-                    return False
-    return True
-
-
-def run_official(spark, con, args, tracker) -> tuple[dict, dict]:
-    from slt_runner import translate_query, translate_statement
-
-    from rust_query_engine_greatest_spark.sources import compact
-
-    # honor --layout compacted: the Spark views read the clustered
-    # copies (partsupp is not in TPCH_TABLES — raw); the DuckDB oracle
-    # reads the originals (same rows either way). When stats are active
-    # (default) the view aliases the ANALYZEd catalog table so CBO sees
-    # row/NDV statistics through the official texts' bare table names.
-    from rust_query_engine_greatest_spark.sources import stats as _stats
-
-    src = compact._ACTIVE.get(os.path.abspath(args.dir), args.dir)
-    for t in ALL_TABLES:
-        st = _stats.resolve(args.dir, t)
-        if st is not None:
-            spark.sql(f"CREATE OR REPLACE TEMP VIEW {t} "
-                      f"AS SELECT * FROM {st}")
-        else:
-            path = f"{src}/{t}.parquet" if t in TPCH_TABLES \
-                else f"{args.dir}/{t}.parquet"
-            if not os.path.exists(path):
-                path = f"{args.dir}/{t}.parquet"
-            spark.read.parquet(path).createOrReplaceTempView(t)
-        try:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{args.dir}/{t}.parquet')")
-        except Exception:  # noqa: BLE001 — view exists from the census
-            pass
-    if args.mem:
-        # reference tpch_mem analog for the official-text path: pin
-        # every view into Spark's columnar cache and materialize it
-        # once, so the timed passes measure compute, not IO. (Pre-r9
-        # this flag combination silently ran the disk path — ADVICE r8.)
-        for t in ALL_TABLES:
-            spark.sql(f"CACHE TABLE {t}")
-            spark.table(t).count()
-    census: dict[str, str] = {}
-    best: dict[str, float] = {}
-    from driver_emulator import value_hash
-
-    def make_run_spark(stmts):
-        def run_spark():
-            out = None
-            for s in stmts:
-                if s.lower().startswith(("create", "drop")):
-                    t = translate_statement(s)
-                    for piece in (t if isinstance(t, list) else [t]):
-                        spark.sql(piece)
-                else:
-                    df = spark.sql(translate_query(s))
-                    out = (df.columns, [tuple(r) for r in df.collect()])
-            return out
-        return run_spark
-
-    runners: dict[str, object] = {}
-    for i in range(1, 23):
-        name = f"q{i}"
-        sql = open(os.path.join(REF_QUERIES, f"{name}.sql")).read()
-        stmts = [s.strip() for s in sql.split(";") if s.strip()]
-        run_spark = make_run_spark(stmts)
-
-        def run_duck():
-            out = None
-            for s in stmts:
-                cur = con.execute(s)
-                if not s.lower().startswith(("create", "drop")):
-                    out = ([d[0] for d in cur.description], cur.fetchall())
-            return out
-
-        try:
-            scols, srows = run_spark()
-            ocols, orows = run_duck()
-            if (len(srows) == len(orows)
-                    and value_hash(scols, srows, side="oracle")
-                    == value_hash(ocols, orows, side="oracle")):
-                census[name] = "match"
-            elif _rows_close(srows, orows):
-                census[name] = "match_approx"
-            else:
-                census[name] = f"MISMATCH rows {len(srows)}/{len(orows)}"
-        except Exception as e:  # noqa: BLE001
-            census[name] = f"ERROR {str(e)[:120]}"
-            continue
-        runners[name] = run_spark
-
-    tracker.end("official_census")
-    # the 32-thread DuckDB census heats the box; settle before timing
-    # (same idle discipline as the registry path and bench.py)
-    from instrument import idle_gate
-
-    idle_gate(3.0, 240.0)
-    tracker.end("post_census_gate")
-
-    for p in range(args.passes):
-        for name, run_spark in runners.items():
-            t0 = time.time()
-            run_spark()
-            best[name] = min(best.get(name, 9e9), time.time() - t0)
-        tracker.end(f"pass{p + 1}")
-    return census, best
 
 
 if __name__ == "__main__":

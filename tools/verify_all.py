@@ -2,16 +2,13 @@
 pass, run in sequence with a single summary and exit code.
 
     python tools/verify_all.py [--sf-dir /root/testdata/sf0.01]
-                               [--skip emulator,slt,bench,pytest]
+                               [--skip emulator,bench,pytest]
                                [--full]
 
 Gates (in order):
   emulator  — tools/driver_emulator.py at --sf-dir: entry() smoke +
               every queries() entry hash-compared against its
               oracle_sql() in DuckDB (the driver's CORRECTNESS gate).
-  slt       — the sqllogictest lanes: tests/test_slt_parity.py (the
-              reference's own .slt files, divergence-pinned) +
-              tests/test_slt_dialect.py (dialect layer unit surface).
   bench     — bench.py smoke at sf0.01 (1 iter, mem pass off): the
               JSON line must emit, parse, and contain no failed (-1)
               queries. --full runs the real sf0.1 protocol instead.
@@ -81,12 +78,6 @@ def main() -> int:
         gates.append(("emulator",
                       [sys.executable, "tools/driver_emulator.py",
                        args.sf_dir], None, False))
-    if "slt" not in skip:
-        gates.append(("slt",
-                      [sys.executable, "-m", "pytest",
-                       "tests/test_slt_parity.py",
-                       "tests/test_slt_dialect.py", "-q", "-x"],
-                      None, False))
     if "bench" not in skip:
         env = ({} if args.full else
                {"SPARK_GRAFT_SF_DIR": args.sf_dir,
