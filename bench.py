@@ -185,6 +185,15 @@ def bench_names() -> list[str]:
     return names + [n for n in extra if n not in names]
 
 
+def run_context(spark) -> dict:
+    """How the timings ran: the host's CPU count, the cores Spark
+    actually schedules on (local[N]) and the driver heap."""
+    sc = spark.sparkContext
+    return {"ncpus": os.cpu_count(),
+            "spark_cores": sc.defaultParallelism,
+            "heap": sc.getConf().get("spark.driver.memory")}
+
+
 def main() -> None:
     spark = get_spark(app_name="bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -534,7 +543,7 @@ def main() -> None:
         # #5). load_start/load_end = 1/5/15-min os.getloadavg() — a
         # recording taken at load ≫ ncpus is machine-distinguishable.
         "ts": round(time.time(), 1),
-        "ncpus": os.cpu_count(),
+        **run_context(spark),
         "load_start": [round(x, 2) for x in _LOAD0],
         "load_end": [round(x, 2) for x in os.getloadavg()],
         "idle_gate_waited_s": _GATE_WAITED,

@@ -13,6 +13,11 @@ plans that survive a 1000-executor / 100 TB deployment:
   for any Python-boundary crossing.
 - shuffle.partitions sized by env (cores locally; a cluster deploy would
   raise it or rely on AQE coalescing from a high initial value).
+- local cores and driver heap sized from the machine (usable cores, a
+  third of RAM) unless SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM say.
+- codegen cache sized for the engine's working set: the registry and
+  pipeline mixes generate ~300 classes each, three times Spark's
+  100-entry default, so a smaller cache recompiles them every cycle.
 - session timezone pinned UTC so results are stable against the DuckDB
   oracle and across cluster nodes.
 """
@@ -23,7 +28,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or len(os.sched_getaffinity(0))
+
+
+def default_driver_mem() -> str:
+    """A third of physical RAM as driver heap, 1g to 28g. The rest stays
+    for the Python workers and for shuffle files, which land on tmpfs
+    (RAM) by default; ≤32g keeps compressed oops, and 48g+ heaps
+    measurably slowed the same jobs (pointer bloat + bigger GC regions)
+    on local[32]."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(f.readline().split()[1])  # MemTotal: <n> kB
+    return f"{max(1, min(28, total_kb // 3 // 2**20))}g"
 
 
 def get_spark(
@@ -67,9 +83,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # ≤32g keeps compressed oops; 48g+ heaps measurably slowed the
-        # same jobs (pointer bloat + bigger GC regions) on local[32].
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "28g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Parquet TIMESTAMP(NANOS) (events table) has no Spark type: read
         # the raw int64 nanos and truncate to micros in the source layer
@@ -78,6 +93,15 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-class cache (static, JVM-wide; Spark default 100).
+        # The perfbench `query` mix (TPC-H q1-q22 + 3 registry entries)
+        # needs ~320 classes and `pipeline` ~260, so at 100 entries every
+        # cycle re-ran Janino and the JIT on ~300 evicted classes. At 2000
+        # (4 vCPU, sf0.1): compiles per op 12.3 -> 0.16, classes loaded
+        # per op 23.6 -> 2.1, median cpu_s_per_op 3.28 -> 2.67 s (query)
+        # and 5.19 -> 3.98 s (pipeline) over 10+ interleaved pairs, peak
+        # RSS unchanged: each entry is a few KB of bytecode.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     # Shuffle/spill scratch on tmpfs when available: thread-dump
     # profiling (BENCH_NOTES r4) caught slow runs stalled inside

@@ -12,7 +12,7 @@ Gates (in order):
   bench     — bench.py smoke at sf0.01 (1 iter, mem pass off): the
               JSON line must emit, parse, and contain no failed (-1)
               queries. --full runs the real sf0.1 protocol instead.
-  pytest    — OFF by default (18 min); --full adds the whole suite.
+  pytest    — OFF by default (10-12 min on 4 cores); --full adds the whole suite.
 
 Exit 0 iff every gate passed. Each gate's stdout/stderr tails are
 echoed on failure so the one command is also the diagnosis entry
