@@ -471,7 +471,7 @@ def test_read_auto_formats(spark, nation, tmp_path_factory):
 
 
 def test_bucketed_layout_route_equal_results_fewer_exchanges(spark, sf_dir):
-    """SPARK_GRAFT_BUCKETS layout (bucketing.activate): load_table
+    """Bucketed layout (bucketing.activate): load_table
     routes lineitem/orders to sorted bucketed catalog tables; the
     orderkey join/agg chain then plans with fewer exchanges and
     IDENTICAL results (pinned on q18 — whose big-order aggregate and

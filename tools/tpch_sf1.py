@@ -88,7 +88,8 @@ def main() -> None:
     import duckdb
 
     from driver_emulator import value_hash
-    from instrument import SectionTracker, idle_gate
+    from rust_query_engine_greatest_spark.instrument import (
+        SectionTracker, idle_gate, run_context)
     from rust_query_engine_greatest_spark.queries import REGISTRY
     from rust_query_engine_greatest_spark.session import get_spark
     from rust_query_engine_greatest_spark.sources import (bucketing, compact,
@@ -227,6 +228,7 @@ def main() -> None:
         "idle_gate_waited_s": gate_waited,
         "sections": tracker.sections,
         "ts": round(time.time(), 1),
+        **run_context(spark),
     }))
 
 

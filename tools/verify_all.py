@@ -11,7 +11,10 @@ Gates (in order):
               oracle_sql() in DuckDB (the driver's CORRECTNESS gate).
   bench     — bench.py smoke at sf0.01 (1 iter, mem pass off): the
               JSON line must emit, parse, and contain no failed (-1)
-              queries. --full runs the real sf0.1 protocol instead.
+              entry in any queries* map. --full runs the real sf0.1
+              protocol instead. bench.py reads four env vars:
+              SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_ITERS,
+              SPARK_GRAFT_BENCH_MEM and SPARK_GRAFT_BENCH_IDLE_WAIT.
   pytest    — OFF by default (10-12 min on 4 cores); --full adds the whole suite.
 
 Exit 0 iff every gate passed. Each gate's stdout/stderr tails are
@@ -47,9 +50,8 @@ def run_gate(name: str, cmd: list[str], env: dict | None = None,
                      if ln.startswith("{")), "")
         try:
             out = json.loads(line)
-            bad = [k for k, v in out.get("queries", {}).items() if v == -1.0]
-            bad += [k for k, v in out.get("queries_pipeline", {}).items()
-                    if v == -1.0]
+            bad = [k for m, q in out.items() if m.startswith("queries")
+                   for k, v in q.items() if v == -1.0]
             if bad:
                 ok, detail = False, f"failed queries: {bad}"
         except (ValueError, StopIteration):
