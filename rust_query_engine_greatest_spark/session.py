@@ -119,4 +119,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # CodeGenerator sizes that cache from SQLConf.get when its object is
+    # first loaded. A first codegen on a JVM thread with no active
+    # session (df.rdd from a worker thread, as the pipeline operators'
+    # partition check does) reads Spark's defaults there: 100 entries,
+    # and the mixes recompile every cycle. Load it here, where the
+    # session is active.
+    getattr(getattr(spark._jvm, "org.apache.spark.sql.catalyst."
+                                "expressions.codegen.CodeGenerator$"),
+            "MODULE$")
     return spark

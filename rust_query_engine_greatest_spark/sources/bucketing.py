@@ -96,17 +96,17 @@ def activate(spark: SparkSession, sf_dir: str, n_buckets: int,
         if not spark.catalog.tableExists(tbl):
             write_bucketed(catalog.load_table(spark, sf_dir, name), tbl,
                            [key], n_buckets, [key])
-        # ANALYZE the bucketed table itself so a stats+CBO session keeps
-        # estimate-driven join order when load_table routes here instead
-        # of to the stat_ twin (bucketed route wins). Runs even when the
-        # table pre-exists: a bucketed table persisted in the warehouse
+        # Statistics on the bucketed table itself so a stats+CBO session
+        # keeps estimate-driven join order when load_table routes here
+        # instead of to the stat_ twin (bucketed route wins). Checked
+        # even when the table pre-exists: one persisted in the warehouse
         # by an EARLIER session satisfies tableExists with no column
-        # stats, and skipping the (cheap, idempotent) ANALYZE would
-        # silently strip CBO from every query routed to it.
-        from .stats import _statable_columns
+        # stats, and skipping them would silently strip CBO from every
+        # query routed to it. A rewrite gets new file mtimes, so saved
+        # statistics of the old files are never restored onto it.
+        from .stats import analyze_or_restore
 
-        spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-                  f"FOR COLUMNS {_statable_columns(spark, tbl)}")
+        analyze_or_restore(spark, tbl)
         _BUCKETED[(os.path.abspath(sf_dir), name)] = tbl
     return round(time.perf_counter() - t0, 2)
 

@@ -267,3 +267,154 @@ def test_ntz_column_stats_matcherror_pin(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# ---- saved statistics: analyze once, restore in later sessions -------------
+
+CBO_ENTRIES = ("tpch_q2", "tpch_q5", "tpch_q7", "tpch_q8", "tpch_q9",
+               "tpch_q21")
+
+
+@pytest.fixture()
+def store(spark, tmp_path, monkeypatch):
+    """An empty statistics store and no stat_ table in the catalog, so
+    the next activate has nothing to skip and nothing to restore."""
+    def clean():
+        stats.deactivate(spark=spark, drop=True)
+        for r in spark.sql("SHOW TABLES LIKE 'stat_*'").collect():
+            spark.sql(f"DROP TABLE {r.tableName}")
+
+    clean()
+    monkeypatch.setattr(stats, "STATS_DIR", str(tmp_path))
+    yield tmp_path
+    clean()
+
+
+def _catalog_stats(spark, sf_dir, tables):
+    """Per table: its CatalogStatistics string (size, rows and every
+    column's CatalogColumnStat)."""
+    return {t: stats._catalog(spark).getTableMetadata(
+                stats._ident(spark, stats.resolve(sf_dir, t)))
+            .stats().get().toString() for t in tables}
+
+
+def _spy_sql(spark):
+    ran = []
+    real_sql = spark.sql
+    spark.sql = lambda q, *a, **k: (ran.append(q), real_sql(q, *a, **k))[1]
+    return ran
+
+
+def test_restore_runs_no_job_and_equals_computed(spark, sf_dir, store):
+    """First activate ANALYZEs and saves one record per table; after the
+    tables are dropped (a new session's empty catalog), activate restores
+    them without a single Spark job, to the same CatalogStatistics."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("stats_store", "analyze, then restore")
+    try:
+        stats.activate(spark, sf_dir)
+        analyzed_jobs = list(tracker.getJobIdsForGroup("stats_store"))
+        assert analyzed_jobs, "the first activate ran no ANALYZE job"
+        assert len(list(store.glob("*.json"))) == len(stats.TPCH_TABLES)
+        computed = _catalog_stats(spark, sf_dir, stats.TPCH_TABLES)
+        stats.deactivate(sf_dir, spark=spark, drop=True)
+        stats.activate(spark, sf_dir)
+        assert list(tracker.getJobIdsForGroup("stats_store")) == analyzed_jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _catalog_stats(spark, sf_dir, stats.TPCH_TABLES) == computed
+
+
+def test_restored_stats_give_identical_plans(spark, sf_dir, store):
+    """The CBO-sensitive TPC-H entries (join reorder from row counts and
+    NDVs) plan the same, node statistics included, on restored
+    statistics as on computed ones."""
+    import re
+
+    from rust_query_engine_greatest_spark.queries import REGISTRY
+
+    def plans():
+        return {n: re.sub(r"(#|plan_id=)\d+", r"\1",
+                          REGISTRY[n].build(spark, sf_dir)
+                          ._jdf.queryExecution().stringWithStats())
+                for n in CBO_ENTRIES}
+
+    stats.activate(spark, sf_dir)
+    computed = plans()
+    stats.deactivate(sf_dir, spark=spark, drop=True)
+    stats.activate(spark, sf_dir)
+    restored = plans()
+    for n in CBO_ENTRIES:
+        assert restored[n] == computed[n], n
+
+
+def _one_table_dir(sf_dir, tmp_path):
+    import shutil
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/region.parquet", d / "region.parquet")
+    return d
+
+
+def test_rewritten_file_falls_back_to_analyze(spark, sf_dir, store, tmp_path):
+    """A data file rewritten since the save changes the fingerprint: the
+    saved statistics are ignored, ANALYZE runs over the new contents and
+    the record is rewritten."""
+    import json
+    import shutil
+
+    d = _one_table_dir(sf_dir, tmp_path)
+    stats.activate(spark, str(d), tables=("region",))
+    rec, = store.glob("*.json")
+    before = rec.read_text()
+    stats.deactivate(str(d), spark=spark, drop=True)
+    shutil.copy(f"{sf_dir}/nation.parquet", d / "region.parquet")
+    ran = _spy_sql(spark)
+    try:
+        stats.activate(spark, str(d), tables=("region",))
+    finally:
+        del spark.sql
+    assert [q for q in ran if q.startswith("ANALYZE")], ran
+    assert rec.read_text() != before
+    # nation's 25 rows, not region's 5, in the catalog and the record
+    st = _catalog_stats(spark, str(d), ("region",))["region"]
+    assert ",Some(25),Map(" in st, st
+    assert json.loads(rec.read_text())["rows"] == 25
+
+
+def test_corrupt_record_falls_back_to_analyze(spark, sf_dir, store, tmp_path):
+    """A truncated record is unreadable: ANALYZE runs and rewrites it."""
+    import json
+
+    d = _one_table_dir(sf_dir, tmp_path)
+    stats.activate(spark, str(d), tables=("region",))
+    rec, = store.glob("*.json")
+    good = rec.read_text()
+    stats.deactivate(str(d), spark=spark, drop=True)
+    rec.write_text(good[:len(good) // 2])
+    ran = _spy_sql(spark)
+    try:
+        stats.activate(spark, str(d), tables=("region",))
+    finally:
+        del spark.sql
+    assert [q for q in ran if q.startswith("ANALYZE")], ran
+    assert json.loads(rec.read_text())["rows"] == 5
+
+
+def test_activate_gives_stats_to_stats_less_table(spark, sf_dir, store):
+    """A stat_ table whose CREATE succeeded but whose ANALYZE failed has
+    no statistics; a later activate must give it some instead of routing
+    load_table to it as it is."""
+    import hashlib
+    import os
+
+    path = os.path.abspath(f"{sf_dir}/supplier.parquet")
+    tbl = f"stat_{hashlib.md5(path.encode()).hexdigest()[:8]}_supplier"
+    spark.sql(f"CREATE TABLE {tbl} USING parquet LOCATION '{path}'")
+    stats.activate(spark, sf_dir, tables=("supplier",))
+    assert stats.resolve(sf_dir, "supplier") == tbl
+    desc = {r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()}
+    assert "rows" in desc.get("Statistics", ""), desc.get("Statistics")

@@ -34,3 +34,41 @@ def test_second_tpch_pass_recompiles_almost_nothing(spark, sf_dir):
     for name in TPCH:
         REGISTRY[name].build(spark, sf_dir).collect()
     assert compiles.getCount() - before < len(TPCH)
+
+
+def test_codegen_cache_sized_when_first_codegen_runs_off_session_thread():
+    """The cache size holds even when a fresh JVM's first codegen runs on
+    a worker thread with no active session (df.rdd, as the pipeline
+    operators' partition check calls it from perfbench's warm-up pool):
+    150 distinct two-class queries run twice recompile nothing. Without
+    the session's early CodeGenerator load the cache got Spark's 100
+    entries and the second pass recompiled all 300 classes. Needs its
+    own JVM, so it runs in a subprocess."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import threading
+from rust_query_engine_greatest_spark.session import get_spark
+spark = get_spark(app_name="codegen-thread", cpus=2)
+t = threading.Thread(target=lambda: spark.range(10).selectExpr("id * 2 AS x")
+                     .filter("x > 3").rdd.getNumPartitions())
+t.start(); t.join()
+def run():
+    for i in range(150):
+        spark.range(5).selectExpr(f"id + {i} AS a", f"id * {i + 1} AS b") \\
+            .filter(f"a > {i}").collect()
+run()
+m = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+before = m.METRIC_COMPILATION_TIME().getCount()
+run()
+print("RECOMPILES", m.METRIC_COMPILATION_TIME().getCount() - before)
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", script], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=600)
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("RECOMPILES")]
+    assert line, out.stderr[-2000:]
+    assert line[0] == "RECOMPILES 0", line
