@@ -25,6 +25,8 @@ import os
 import sys
 import time
 
+from . import session
+
 
 def cpu_snapshot() -> tuple[float, float, float]:
     """(machine busy cpu-sec, this process tree cpu-sec, machine iowait
@@ -167,7 +169,8 @@ def drain_writeback() -> None:
 def run_context(spark) -> dict:
     """How the timings ran: the host's CPU count, the cores Spark
     actually schedules on (local[N]), the driver heap, the effective
-    scratch dir and the Spark version."""
+    scratch dir, the Spark version, and the class-sharing archive the
+    driver JVM started with and whether it mapped it."""
     sc = spark.sparkContext
     conf = sc.getConf()
     return {"ncpus": os.cpu_count(),
@@ -177,4 +180,5 @@ def run_context(spark) -> dict:
             # neither set it falls back to java.io.tmpdir, /tmp on Linux
             "local_dir": (os.environ.get("SPARK_LOCAL_DIRS")
                           or conf.get("spark.local.dir", "/tmp")),
-            "spark_version": spark.version}
+            "spark_version": spark.version,
+            "class_sharing": dict(session.CLASS_SHARING)}

@@ -17,18 +17,21 @@ min/max stats prune date-predicate scans (the reference's
 row-group/page pruning analog, `core/src/datasource/physical_plan/
 parquet/row_group_filter.rs`).
 
-The rewrite happens once per sf_dir, is cached under spark-warehouse/,
-and is activated explicitly (bench.py) — the correctness gate keeps
-reading the driver's original files.
+The rewrite happens once per sf_dir and version of its files, is cached
+under spark-warehouse/compacted/, and is activated explicitly (bench.py)
+— the correctness gate keeps reading the driver's original files.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import time
 
 from pyspark.sql import SparkSession
 
+from . import stats
 from .catalog import TABLES, load_table
 
 # Local[32] tuning, measured (interleaved A/B over the bench suite at
@@ -52,10 +55,21 @@ CLUSTER_COL = {
 _ACTIVE: dict[str, str] = {}
 
 
+# Compacted copies, in the checkout's warehouse next to stats.STATS_DIR.
+COMPACT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "..", "..", "spark-warehouse", "compacted")
+
+
 def _dest_root(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "..", "..", "spark-warehouse", "compacted", tag)
+    """The copy's root, keyed by the resolved source dir and the name,
+    size and mtime of every source table file: a second dir with the same
+    name, or a rewritten source file, gets a copy of its own."""
+    src = os.path.realpath(sf_dir)
+    fp = [src] + [stats._files(os.path.join(src, f"{t}.parquet"))
+                  for t in TABLES]
+    digest = hashlib.sha1(json.dumps(fp).encode()).hexdigest()[:16]
+    return os.path.join(COMPACT_DIR,
+                        f"{os.path.basename(src) or 'data'}-{digest}")
 
 
 def compact_tables(spark: SparkSession, sf_dir: str,

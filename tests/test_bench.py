@@ -9,14 +9,14 @@ import os
 import sys
 import types
 
-from rust_query_engine_greatest_spark import instrument
+from rust_query_engine_greatest_spark import instrument, session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # the JSON line's top-level keys when every section reports
 BENCH_KEYS = {
     "metric", "value", "unit", "queries", "sf", "layout", "compact_s", "ts",
-    "ncpus", "spark_cores", "heap", "local_dir", "spark_version",
+    "ncpus", "spark_cores", "heap", "local_dir", "spark_version", "class_sharing",
     "load_start", "load_end", "idle_gate_waited_s", "sections",
     "section_gate_waited_s", "section_retries", "wall_s",
     "queries_mem", "mem_total_best", "queries_pipeline",
@@ -105,20 +105,26 @@ def test_failed_retry_never_overwrites_a_good_sample():
 def test_run_context_records_effective_cores_and_heap(monkeypatch):
     """The artifact states the local[N] Spark ran on, its heap, the
     effective scratch dir (SPARK_LOCAL_DIRS wins over spark.local.dir,
-    as in Spark) and the Spark version, next to the host's CPU count."""
+    as in Spark), the Spark version and the driver JVM's class-sharing
+    archive and whether it was mapped, next to the host's CPU count."""
     conf = {"spark.driver.memory": "5g", "spark.local.dir": "/dev/shm/x"}
     monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
+    monkeypatch.setattr(session, "CLASS_SHARING", {"archive": None, "mapped": False})
     ctx = instrument.run_context(_fake_spark(conf))
     assert ctx == {"ncpus": os.cpu_count(), "spark_cores": 3, "heap": "5g",
-                   "local_dir": "/dev/shm/x", "spark_version": "4.1.2"}
+                   "local_dir": "/dev/shm/x", "spark_version": "4.1.2",
+                   "class_sharing": {"archive": None, "mapped": False}}
     monkeypatch.setenv("SPARK_LOCAL_DIRS", "/tmp/spark-local")
+    monkeypatch.setattr(session, "CLASS_SHARING", {"archive": "a.jsa", "mapped": True})
     ctx = instrument.run_context(_fake_spark(conf))
     assert ctx["local_dir"] == "/tmp/spark-local"
+    assert ctx["class_sharing"] == {"archive": "a.jsa", "mapped": True}
 
 
 def test_bench_json_keys_are_stable():
     """The driver reads bench.py's JSON line: its top-level keys stay
-    those of earlier rounds plus local_dir and spark_version."""
+    those of earlier rounds plus local_dir, spark_version and
+    class_sharing."""
     bench = _load("bench.py")
     conf = {"spark.driver.memory": "5g"}
     record = bench.Harness(0.0).record(instrument.run_context(_fake_spark(conf)))

@@ -178,6 +178,39 @@ def test_compacted_layout_preserves_results(spark, sf_dir):
         compact.deactivate()
 
 
+def test_compacted_copy_tracks_source_path_and_files(spark, sf_dir, tmp_path, monkeypatch):
+    """The compacted copy is keyed by the resolved source dir and its
+    files: a second dir with the same name, and a rewritten source file,
+    each get their own copy with their own rows (keyed by the dir's name
+    alone, both read the first copy's 25 nations)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from rust_query_engine_greatest_spark.sources import compact
+
+    monkeypatch.setattr(compact, "COMPACT_DIR", str(tmp_path / "compacted"))
+    nation = pq.read_table(os.path.join(sf_dir, "nation.parquet"))
+    dirs = [tmp_path / "a" / "sf", tmp_path / "b" / "sf"]
+    for d, rows in zip(dirs, (25, 5)):
+        d.mkdir(parents=True)
+        for t in catalog.TABLES:
+            if t != "nation":
+                os.symlink(os.path.join(sf_dir, f"{t}.parquet"), d / f"{t}.parquet")
+        pq.write_table(nation.slice(0, rows), d / "nation.parquet")
+
+    def compacted_rows(d):
+        root, _ = compact.compact_tables(spark, str(d), tables=("nation",))
+        return root, spark.read.parquet(os.path.join(root, "nation.parquet")).count()
+
+    (root_a, rows_a), (root_b, rows_b) = map(compacted_rows, dirs)
+    assert root_a != root_b and (rows_a, rows_b) == (25, 5)
+    pq.write_table(nation.slice(0, 7), dirs[0] / "nation.parquet")
+    root_a2, rows_a2 = compacted_rows(dirs[0])
+    assert root_a2 not in (root_a, root_b) and rows_a2 == 7
+    assert compacted_rows(dirs[0]) == (root_a2, 7)  # unchanged files: reused
+
+
 def test_object_store_conf_and_gating(spark):
     """§2.1 object-store row: conf assembly is pure and the remote read
     path fails with a setup hint (no connector jars in this container)."""
